@@ -337,7 +337,8 @@ object Bench {
     // that also live on the full line (lanes, load stamps) move off
     // the final line to keep it inside the driver's 2000-char tail
     // next to sbt's closing "[success]" line; if a degenerate lap
-    // still overflows ~1900 chars, values degrade to 1 decimal.
+    // still overflows ~1900 chars, values degrade to 1 decimal, then
+    // to the slowest-five digest alone.
     println(digestJson(mins, total, sfTag))
     spark.stop()
   }
@@ -347,7 +348,8 @@ object Bench {
     * the lap runs and the meaning of "order":"alpha". Values are
     * min-seconds at 2 decimals, trailing zeros trimmed (~5 B/query);
     * a degenerate lap that would overflow ~1900 chars degrades to 1
-    * decimal rather than truncate mid-JSON.
+    * decimal, and if that still overflows, to the slowest-five digest
+    * with no `order`/`v` — never a line truncated mid-JSON.
     */
   def digestJson(mins: Seq[(String, Double)], total: Double, sfTag: String): String = {
     def r3(v: Double): Double = math.round(v * 1000) / 1000.0
@@ -364,14 +366,14 @@ object Bench {
     val slowest = mins.sortBy(-_._2).take(5)
       .map { case (k, v) => "\"" + k.takeWhile(_ != '_') + "\":" + r2(v) }
       .mkString("{", ",", "}")
-    def line(decimals: Int): String = {
-      val vArr = mins.map { case (_, v) => fmtTrim(v, decimals) }
-        .mkString("[", ",", "]")
+    def line(values: String): String =
       s"""{"metric":"total","value":${r3(total)},"unit":"sec","n":${mins.size},""" +
-        s""""queries":$slowest,"order":"alpha","v":$vArr,"sf":"$sfTag"}"""
-    }
-    val d2 = line(2)
-    if (d2.length <= 1900) d2 else line(1)
+        s""""queries":$slowest,$values"sf":"$sfTag"}"""
+    def valueArray(decimals: Int): String =
+      mins.map { case (_, v) => fmtTrim(v, decimals) }
+        .mkString("\"order\":\"alpha\",\"v\":[", ",", "],")
+    Iterator(2, 1).map(d => line(valueArray(d))).find(_.length <= 1900)
+      .getOrElse(line(""))
   }
 
   /** Queries whose implementation executes a Structured Streaming

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
 import graft.model.NearEvent
 
 /** The reference pipeline over real `EVENT_JSON:` log lines — shared
@@ -19,6 +20,10 @@ import graft.model.NearEvent
   *                          reference does per-token RPCs — at 100 TB
   *                          only a join survives)
   *  - [[toKafkaRecords]]  ← events.rs:76-98 send_event (key/topic/value)
+  *  - [[metadataRecords]] ← events.rs:168-225 send_event_with_metadata
+  *  - [[enrichedKafkaRecords]] ← events.rs:157-250: the envelope and
+  *                          metadata deliveries together, in one pass
+  *                          over the events (one generator, one join)
   */
 object EventStreams {
 
@@ -99,38 +104,48 @@ object EventStreams {
   def eventTopic(prefix: String): Column =
     concat_ws(".", lit(prefix), col("standard"), col("event"))
 
-  /** NEP-171 mint/transfer array payloads → one row per element.
-    * Non-NEP-171 events pass through unexploded with a null flat slot
-    * filtered out (the reference returns an empty vec for those).
+  /** One flat NEP-171 token's own fields, in the order the flat record
+    * serializes them after (standard, version, event, emit_info).
     */
-  def flattenNep171(events: DataFrame): DataFrame = {
+  private val slotType = StructType(
+    Seq("owner_id", "old_owner_id", "new_owner_id", "token_id", "memo")
+      .map(StructField(_, StringType)))
+
+  /** The flat tokens of an event (event_types.rs:42-66
+    * try_flatten_nep171_event): one [[slotType]] slot per token id
+    * across every element of a mint or transfer `data` array; null for
+    * any other event or an unparseable payload. A null element or a
+    * null/missing `token_ids` contributes no slot (coalesced to empty,
+    * else `flatten` would null the event's whole array); a null token
+    * id inside `token_ids` keeps its slot. The single definition of
+    * "the flat tokens of an event" behind [[flattenNep171]] and
+    * [[enrichedKafkaRecords]].
+    */
+  private def tokenSlots: Column = {
     val isMint = col("standard") === "nep171" && col("event") === "nft_mint"
     val isTransfer = col("standard") === "nep171" && col("event") === "nft_transfer"
-    val parsed = events
-      .withColumn("mint_arr",
-        when(isMint, from_json(get_json_object(col("data"), "$.data"), org.apache.spark.sql.types.ArrayType(mintDataSchema))))
-      .withColumn("xfer_arr",
-        when(isTransfer, from_json(get_json_object(col("data"), "$.data"), org.apache.spark.sql.types.ArrayType(transferDataSchema))))
-    val mints = parsed.filter(isMint)
-      .select(col("standard"), col("version"), col("event"), col("emit_info"),
-        explode(col("mint_arr")).as("m"))
-      .select(col("standard"), col("version"), col("event"), col("emit_info"),
-        col("m.owner_id").as("owner_id"),
-        lit(null).cast("string").as("old_owner_id"),
-        lit(null).cast("string").as("new_owner_id"),
-        explode(col("m.token_ids")).as("token_id"),
-        col("m.memo").as("memo"))
-    val xfers = parsed.filter(isTransfer)
-      .select(col("standard"), col("version"), col("event"), col("emit_info"),
-        explode(col("xfer_arr")).as("t"))
-      .select(col("standard"), col("version"), col("event"), col("emit_info"),
-        lit(null).cast("string").as("owner_id"),
-        col("t.old_owner_id").as("old_owner_id"),
-        col("t.new_owner_id").as("new_owner_id"),
-        explode(col("t.token_ids")).as("token_id"),
-        col("t.memo").as("memo"))
-    mints.unionByName(xfers)
+    val payload = get_json_object(col("data"), "$.data")
+    val none = lit(null).cast(StringType)
+    def slots(schema: StructType, owners: Column => Seq[Column]): Column =
+      flatten(transform(from_json(payload, ArrayType(schema)), e =>
+        transform(coalesce(e("token_ids"), array().cast(ArrayType(StringType))), t =>
+          struct((owners(e) ++ Seq(t, e("memo"))).zip(slotType.fieldNames)
+            .map { case (c, name) => c.as(name) }: _*))))
+    when(isMint, slots(mintDataSchema, e => Seq(e("owner_id"), none, none)))
+      .when(isTransfer, slots(transferDataSchema,
+        e => Seq(none, e("old_owner_id"), e("new_owner_id"))))
   }
+
+  /** NEP-171 mint/transfer array payloads → one row per token.
+    * Non-NEP-171 events yield no rows (the reference returns an empty
+    * vec for those).
+    */
+  def flattenNep171(events: DataFrame): DataFrame =
+    events
+      .select(col("standard"), col("version"), col("event"), col("emit_info"),
+        explode(tokenSlots).as("slot"))
+      .select(col("standard"), col("version"), col("event"), col("emit_info"),
+        col("slot.*"))
 
   /** Broadcast-join flat events with a token-metadata dim table keyed
     * (contract_account_id, token_id); derives `_id = contract:token`
@@ -206,5 +221,42 @@ object EventStreams {
     enriched.select(
       eventKey.as("key"), value.as("value"),
       concat(eventTopic(prefix), lit("_metadata")).as("topic"))
+  }
+
+  /** All three deliveries of the enriched path (events.rs:157-250) —
+    * the envelope to its own topic and to `allTopic`, and each flat
+    * enriched token to `<topic>_metadata` — from ONE pass over
+    * `events`. The records equal [[toKafkaRecords]] ∪
+    * [[metadataRecords]]([[enrichMetadata]]([[flattenNep171]])), but a
+    * union of those branches re-reads and re-parses the source once
+    * per branch. Here one generator turns each event into its
+    * envelope row (a null slot) plus one row per [[tokenSlots]] slot;
+    * the [[enrichMetadata]] broadcast join then matches only the
+    * token rows (the envelope row's token_id is null, so it never
+    * matches or multiplies), and the final projection serializes each
+    * row once, as its own kind, before fanning out to its topics.
+    */
+  def enrichedKafkaRecords(events: DataFrame, tokens: DataFrame,
+      prefix: String, allTopic: String): DataFrame = {
+    val envelope = events.columns.map(col).toSeq
+    val slots = concat(array(lit(null).cast(slotType)),
+      coalesce(tokenSlots, array().cast(ArrayType(slotType))))
+    val rows = events
+      .select(envelope :+ explode(slots).as("slot"): _*)
+      .select(envelope ++ (col("slot").isNull.as("is_envelope") +:
+        slotType.fieldNames.toSeq.map(f => col(s"slot.$f").as(f))): _*)
+    val flat = Seq("standard", "version", "event", "emit_info") ++
+      slotType.fieldNames ++ Seq("title", "media", "extra", "_id", "metadata_extra")
+    val isEnvelope = col("is_envelope")
+    enrichMetadata(rows, tokens)
+      .select(eventKey.as("key"),
+        when(isEnvelope, to_json(struct(envelope: _*)))
+          .otherwise(to_json(struct(flat.map(col): _*))).as("value"),
+        when(isEnvelope, array(eventTopic(prefix), lit(allTopic)))
+          .otherwise(array(concat(eventTopic(prefix), lit("_metadata")))).as("topics"))
+      // never empty, so explode_outer equals explode here; the outer
+      // form keeps InferFiltersFromGenerate from re-deriving `topics`
+      // in a size filter pushed below the join
+      .select(col("key"), col("value"), explode_outer(col("topics")).as("topic"))
   }
 }

@@ -13,7 +13,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *                                 → [[EventStreams.toKafkaRecords]] routing
   *  - `whitelist/blacklist_contract_ids`
   *                                 → [[EventStreams.filterContracts]]
-  *  - `enrich_metadata`            → [[EventStreams.enrichMetadata]] stage
+  *  - `enrich_metadata`            → [[EventStreams.enrichedKafkaRecords]]
+  *                                   (flatten + [[EventStreams.enrichMetadata]]
+  *                                   join + `<topic>_metadata` delivery)
   *  - `stats_enabled`              → [[StreamJobs.windowedStats]] side query
   *  - `new_topic_partitions/replication`, `force_create_new_topic`
   *                                 → carried as sink properties (Spark's
@@ -45,25 +47,21 @@ final case class NesConfig(
     * the flat enriched copies to `<topic>_metadata`; enrichment never
     * replaces the envelope deliveries). `tokens` supplies the
     * metadata dim (the reference's per-token RPC lookup, re-expressed
-    * as a broadcast join). The union's two branches re-evaluate the
-    * extract upstream — the cost of the dual-shape fanout; the
-    * reference likewise serializes the event once per delivery.
+    * as a broadcast join). Enrichment on, all three deliveries come
+    * from one pass over the source
+    * ([[EventStreams.enrichedKafkaRecords]]).
     */
   def pipeline(logs: DataFrame, tokens: Option[DataFrame] = None): DataFrame = {
     val filtered = EventStreams.filterContracts(
       EventStreams.validated(EventStreams.extractEvents(logs)),
       whitelistContractIds, blacklistContractIds)
-    val main = EventStreams.toKafkaRecords(
-      filtered, nearEventsTopicPrefix, nearEventsAllTopic)
-    if (!enrichMetadata) main
-    else {
-      val enriched = EventStreams.enrichMetadata(
-        EventStreams.flattenNep171(filtered),
+    if (!enrichMetadata)
+      EventStreams.toKafkaRecords(filtered, nearEventsTopicPrefix, nearEventsAllTopic)
+    else
+      EventStreams.enrichedKafkaRecords(filtered,
         tokens.getOrElse(throw new IllegalArgumentException(
-          "enrich_metadata=true requires a tokens metadata frame")))
-      main.unionByName(
-        EventStreams.metadataRecords(enriched, nearEventsTopicPrefix))
-    }
+          "enrich_metadata=true requires a tokens metadata frame")),
+        nearEventsTopicPrefix, nearEventsAllTopic)
   }
 }
 

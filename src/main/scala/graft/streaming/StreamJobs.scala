@@ -519,12 +519,6 @@ object StreamJobs {
       conf.map { case (k, v) => s"kafka.$k" -> v }
   }
 
-  /** File-based streaming run of the full reference pipeline:
-    * readStream(json logs) → extract → validate → filter → kafka-shape
-    * → partitioned parquet sink by topic (the no-broker stand-in for
-    * per-topic Kafka delivery; foreachBatch so the same batch writer
-    * serves both engines).
-    */
   /** The (log, emit-info) ingress row shape — BlockSource.schema's
     * twin for file sources.
     */
@@ -537,6 +531,12 @@ object StreamJobs {
       org.apache.spark.sql.types.StructField("shard_id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("contract_account_id", org.apache.spark.sql.types.StringType)))
 
+  /** File-based streaming run of the full reference pipeline:
+    * readStream(json logs) → extract → validate → filter → kafka-shape
+    * → partitioned parquet sink by topic (the no-broker stand-in for
+    * per-topic Kafka delivery), enrichment off — the
+    * [[NesConfig.runConfigured]] chain under the given routing.
+    */
   def runFilePipeline(
       spark: SparkSession,
       sourceDir: String,
@@ -545,18 +545,9 @@ object StreamJobs {
       whitelist: Seq[String] = Nil,
       blacklist: Seq[String] = Nil,
       prefix: String = "near.events",
-      allTopic: String = "near.events.all"): org.apache.spark.sql.streaming.StreamingQuery = {
-    val logs = spark.readStream.schema(logSchema).json(sourceDir)
-    val events = EventStreams.filterContracts(
-      EventStreams.validated(EventStreams.extractEvents(logs)), whitelist, blacklist)
-    val records = EventStreams.toKafkaRecords(events, prefix, allTopic)
-    records.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").partitionBy("topic").parquet(outDir)
-      }
-      .start()
-  }
+      allTopic: String = "near.events.all"): org.apache.spark.sql.streaming.StreamingQuery =
+    NesConfig.runConfigured(spark,
+      NesConfig(nearEventsTopicPrefix = prefix, nearEventsAllTopic = allTopic,
+        whitelistContractIds = whitelist, blacklistContractIds = blacklist),
+      sourceDir, outDir, checkpointDir)
 }

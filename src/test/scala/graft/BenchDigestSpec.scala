@@ -63,4 +63,39 @@ class BenchDigestSpec extends AnyFunSuite {
     val line = Bench.digestJson(mins, 11.1, "sf0.01")
     assert(line.contains("\"v\":[0.3,9.5,1,0.34]"), line)
   }
+
+  /** A lap as a tail reader sees it: the last 2000 chars of sbt's output,
+    * where the digest follows the full-map line and precedes sbt's
+    * closing line. The naive reader drops sbt's `[info] ` tag and
+    * parses the last line that starts with `{`.
+    */
+  private def naiveRead(digest: String): com.fasterxml.jackson.databind.JsonNode = {
+    val out = "[info] {\"metric\":\"total_full\",\"queries\":{" + ("\"q\":1," * 800) +
+      "\"z\":1}}\n[info] {\"bench_full\":\"tmp/bench_full.json\"}\n[info] " + digest +
+      "\n[success] Total time: 1548 s (25:48), completed Aug 18, 2026, 1:05:34 PM\n"
+    val last = out.takeRight(2000).split("\n").map(_.stripPrefix("[info] "))
+      .filter(_.startsWith("{")).last
+    new com.fasterxml.jackson.databind.ObjectMapper().readTree(last)
+  }
+
+  test("a lap that overflows even at 1 decimal falls back to the slowest-five digest") {
+    // degenerate lap: every minimum >= 100 s, so even 1-decimal values
+    // (~6 B/query) overflow the 1900-char budget
+    val mins = syntheticMins(343, i => 100.25 + i * 0.5)
+    val line = Bench.digestJson(mins, mins.map(_._2).sum, "sf0.1")
+    assert(line.length <= 1900, s"digest too long: ${line.length}")
+    val node = naiveRead(line)
+    assert(node.get("metric").asText === "total")
+    assert(node.get("n").asInt === 343)
+    assert(node.get("queries").size === 5)
+    assert(node.get("sf").asText === "sf0.1")
+    assert(!node.has("v") && !node.has("order"))
+  }
+
+  test("the naive tail reader finds the full value array on a normal lap") {
+    val mins = syntheticMins(343, i => 0.1 + (i % 50) * 0.07)
+    val node = naiveRead(Bench.digestJson(mins, mins.map(_._2).sum, "sf0.1"))
+    assert(node.get("v").size === 343)
+    assert(node.get("order").asText === "alpha")
+  }
 }
